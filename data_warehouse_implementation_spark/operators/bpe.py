@@ -158,7 +158,6 @@ def bpe_encode(
     text_col: str = "text",
     id_col: str = "doc_id",
     alphabet: DataFrame | None = None,
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Tokenize documents with a trained merge table: fold the merges
     in rank order over each word's symbol string (the standard greedy
@@ -177,15 +176,7 @@ def bpe_encode(
     merge's output (the fold only ever concatenates ``' l r '`` into
     ``' lr '``), and the end mark is ``</w>`` — both always known. The
     alphabet rides the encode as one broadcast map row, same as the
-    merge table.
-
-    ``broadcast_vocab`` (ADVICE r15): the encoded DISTINCT-word table
-    the occurrences attach to is vocab-scale — broadcastable for any
-    natural-language vocabulary, so True is the default; at an extreme
-    (e.g. hashed/synthetic) vocabulary scale where the broadcast would
-    exceed driver/executor limits, pass False to attach by a plain
-    equi-join instead (occurrences shuffle on the word key; tokens are
-    identical either way — join strategy never changes values)."""
+    merge table."""
     # array_sort on the struct (rank leads) — collect_list order is not
     # guaranteed by an upstream orderBy
     table = merges.agg(
@@ -207,8 +198,7 @@ def bpe_encode(
     # occurrence was ~4x the cost of the vocab-scale fold. The encoded
     # vocabulary is the same broadcastable size class as the merge/
     # alphabet artifacts themselves; occurrences attach by broadcast
-    # join, so documents are still never shuffled. (At an extreme
-    # hashed-vocab scale, swap the broadcast for a plain equi-join.)
+    # join, so documents are still never shuffled.
     sym = F.concat(
         F.lit(" "),
         F.concat_ws(" ", F.expr("regexp_extract_all(word, '.', 0)")),
@@ -245,7 +235,6 @@ def bpe_encode(
         wtoks = wenc.crossJoin(F.broadcast(amap)).select(
             "word", F.expr(toks).alias("_toks")
         )
-    attach = F.broadcast(wtoks) if broadcast_vocab else wtoks
-    return tok.join(attach, on="word").select(
+    return tok.join(F.broadcast(wtoks), on="word").select(
         id_col, F.explode("_toks").alias("token")
     )

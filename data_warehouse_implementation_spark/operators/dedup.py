@@ -21,7 +21,7 @@ Scale note on the dictionary: rank-mode shingle ids equal
 ``row_number() OVER (ORDER BY shingle)`` but are computed by the
 deterministic two-phase rank (``relational.global_rank``) — no
 single-task sort anywhere; the mode exists for cross-engine oracle
-determinism. At production scale prefer ``hashed=True``
+determinism. At production scale prefer ``shingle_ids(hashed=True)``
 (``tid = pmod(xxhash64(shingle), P)``): same downstream algebra, zero
 shuffle, collisions statistically irrelevant for LSH banding.
 """
@@ -62,30 +62,15 @@ def word_shingles(
     )
 
 
-def build_dictionary(
-    items: DataFrame, col: str, id_name: str = "tid", hashed: bool = False
-) -> DataFrame:
-    """Deterministic ids for distinct values, two modes:
-
-    ``hashed=False`` (oracle-replay mode, default): dense ids identical
-    to ``row_number() OVER (ORDER BY value)`` (what the oracle SQL
-    runs), but computed WITHOUT a global single-task sort — delegates
-    to :func:`relational.global_rank` (pure value-derived buckets,
+def build_dictionary(items: DataFrame, col: str, id_name: str = "tid") -> DataFrame:
+    """Deterministic dense ids for distinct values, identical to
+    ``row_number() OVER (ORDER BY value)`` (what the oracle SQL runs),
+    but computed WITHOUT a global single-task sort — delegates to
+    :func:`relational.global_rank` (pure value-derived buckets,
     parallel within-bucket rank, cumulative-offset merge; see its
     docstring for why the buckets must be a deterministic function of
-    the value and never a sampled range partitioner).
-
-    ``hashed=True`` (production-scale mode): ``tid = pmod(xxhash64
-    (value), P)`` — pure map-side, no distinct, no ranking, no shuffle
-    at all. Ids are sparse rather than dense, which the downstream
-    min-hash algebra never cares about; 31-bit collisions over a corpus
-    vocabulary are statistically irrelevant to LSH banding. Not
-    DuckDB-replayable (xxhash64 is engine-specific) — the rank mode
-    exists exactly for the oracle differential."""
-    if hashed:
-        return items.select(col).distinct().withColumn(
-            id_name, F.pmod(F.xxhash64(F.col(col)), F.lit(HASH_P)).cast("long")
-        )
+    the value and never a sampled range partitioner). The map-side
+    hashed alternative is :func:`shingle_ids` ``hashed=True``."""
     distinct = items.select(col).distinct()
     return relational.global_rank(distinct, [col], id_name).select(col, id_name)
 
@@ -179,7 +164,6 @@ def pairwise_jaccard(
     doc_items: DataFrame,
     id_col: str = "doc_id",
     item_col: str = "tid",
-    assume_small_pairs: bool = True,
     include_containment: bool = False,
 ) -> DataFrame:
     """Exact Jaccard for given pairs via set-intersection counts:
@@ -189,13 +173,10 @@ def pairwise_jaccard(
 
     ``pairs`` feeds three branches of this plan (the two cand_docs
     unions and the intersection join) — callers should ``.cache()`` it
-    so the candidate join isn't re-executed per branch.
-    ``assume_small_pairs`` broadcasts the pair-scale structures (pairs,
-    candidate-doc set, candidate sizes) into every join — right whenever
-    the LSH threshold keeps candidates ≪ corpus (the normal regime);
-    pass False for adversarial corpora where candidates are fact-scale
-    and let AQE pick the join strategy at runtime."""
-    maybe_small = F.broadcast if assume_small_pairs else (lambda df: df)
+    so the candidate join isn't re-executed per branch. The pair-scale
+    structures (pairs, candidate-doc set, candidate sizes) are
+    broadcast into every join — the LSH threshold keeps candidates ≪
+    corpus."""
     # score only docs that appear in some pair: the candidate doc set is
     # tiny relative to the corpus, so this semi-join prunes the two
     # intersection joins from corpus-scale to candidate-scale
@@ -204,19 +185,19 @@ def pairwise_jaccard(
         .unionByName(pairs.select(F.col("doc_b").alias(id_col)))
         .distinct()
     )
-    doc_items = doc_items.join(maybe_small(cand_docs), on=id_col, how="left_semi")
+    doc_items = doc_items.join(F.broadcast(cand_docs), on=id_col, how="left_semi")
     sizes = doc_items.groupBy(id_col).agg(F.count(F.lit(1)).alias("_sz"))
     a_items = doc_items.select(F.col(id_col).alias("_aid"), F.col(item_col).alias("_ia"))
     b_items = doc_items.select(F.col(id_col).alias("_bid"), F.col(item_col).alias("_ib"))
     inter = (
-        maybe_small(pairs).join(a_items, F.col("doc_a") == F.col("_aid"))
+        F.broadcast(pairs).join(a_items, F.col("doc_a") == F.col("_aid"))
         .join(b_items, (F.col("doc_b") == F.col("_bid")) & (F.col("_ia") == F.col("_ib")))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("_inter"))
     )
     out = (
-        inter.join(maybe_small(sizes.withColumnsRenamed({id_col: "doc_a", "_sz": "_sza"})), on="doc_a")
-        .join(maybe_small(sizes.withColumnsRenamed({id_col: "doc_b", "_sz": "_szb"})), on="doc_b")
+        inter.join(F.broadcast(sizes.withColumnsRenamed({id_col: "doc_a", "_sz": "_sza"})), on="doc_a")
+        .join(F.broadcast(sizes.withColumnsRenamed({id_col: "doc_b", "_sz": "_szb"})), on="doc_b")
         .withColumn(
             "jaccard",
             F.col("_inter").cast("double")
@@ -259,7 +240,6 @@ def connected_components(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 25,
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """Connected components over an undirected pair graph by min-label
     propagation: every node's label converges to the smallest node id
@@ -273,19 +253,8 @@ def connected_components(
     ``localCheckpoint``-ed: iterative plans otherwise nest every prior
     round's lineage, and the per-round Catalyst analysis cost compounds
     until planning, not execution, dominates. The checkpoint cuts the
-    plan back to a leaf — O(|nodes|) state, constant-size plans.
-
-    ``broadcast_state`` (optimization round 16 — the ``graph.pagerank``
-    discipline): the label table is NODE-scale while ``sym`` is
-    edge-scale, but both come off checkpointed RDDs whose stats are
-    opaque to the planner, which therefore sort-merge-joins the edge
-    table every round (a full edge shuffle per round). Broadcasting
-    the per-round node state makes each round map-side joins over the
-    stationary checkpointed edges + one node-scale aggregate exchange.
-    Set False only when the node table itself exceeds broadcast limits
-    (~10^8 nodes); results are identical either way (join strategy
-    never changes values)."""
-    _bs = F.broadcast if broadcast_state else (lambda df: df)
+    plan back to a leaf — O(|nodes|) state, constant-size plans. The
+    per-round node state is broadcast, as in ``graph.pagerank``."""
     # the edge list is consulted every round — materialize it once (and
     # cut the upstream pair-pipeline lineage out of every round's plan);
     # deferred: round 1's convergence count materializes it inside its
@@ -299,7 +268,7 @@ def connected_components(
     labels = nodes.withColumn("label", F.col("id")).localCheckpoint(eager=False)
     for _ in range(max_iter):
         neighbor_min = (
-            sym.join(_bs(labels), sym.dst == labels.id)
+            sym.join(F.broadcast(labels), sym.dst == labels.id)
             .groupBy("src")
             .agg(F.min("label").alias("_nbr"))
         )
@@ -310,8 +279,8 @@ def connected_components(
             F.col("id").alias("_pid"), F.col("label").alias("_plabel")
         )
         new_labels = (
-            labels.join(_bs(neighbor_min), labels.id == neighbor_min.src, "left")
-            .join(_bs(parent), labels.label == F.col("_pid"), "left")
+            labels.join(F.broadcast(neighbor_min), labels.id == neighbor_min.src, "left")
+            .join(F.broadcast(parent), labels.label == F.col("_pid"), "left")
             .select(
                 "id",
                 F.least(
@@ -328,7 +297,7 @@ def connected_components(
         )
         changed = (
             new_labels.alias("n")
-            .join(_bs(labels.alias("o")), on="id")
+            .join(F.broadcast(labels.alias("o")), on="id")
             .filter(F.col("n.label") != F.col("o.label"))
             .count()
         )

@@ -46,8 +46,6 @@ def pagerank(
     weight: str = "weight",
     iter_partitions: int | None = None,
     dangling: str = "forbid",
-    precision: str = "exact",
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """Weighted PageRank over a directed edge list ``(src, dst,
     weight)`` — ``iterations`` synchronous power-iteration rounds with
@@ -94,15 +92,6 @@ def pagerank(
     update is double arithmetic in a fixed expression order (the
     redistribute term is a decimal-exact sum divided by N, added after
     the damped mass) — all bit-replayable cross-engine.
-
-    ``precision``: ``"exact"`` (default) decimal-casts every
-    contribution before the shuffle sum — bit-replayable cross-engine,
-    the mode every oracle-checked query uses; ``"fast"`` keeps plain
-    double sums — the production knob for graphs where ranking matters
-    and last-ulp replay does not (measured ~15% per call on the sf0.1
-    purchase graph, growing with edge volume since the decimal work is
-    per-contribution; agreement with exact mode is ~1e-12 relative,
-    pytest-pinned, because the damped iteration is a contraction).
 
     ``iter_partitions``: iteration-state parallelism. The rank/edge
     tables are NODE-scale, but without an explicit repartition every
@@ -203,17 +192,6 @@ def pagerank(
     )
     if dangling not in ("forbid", "redistribute", "ignore"):
         raise ValueError(f"dangling must be forbid|redistribute|ignore, got {dangling!r}")
-    if precision not in ("exact", "fast"):
-        raise ValueError(f"precision must be exact|fast, got {precision!r}")
-    # 'exact': decimal-cast contributions — bit-replayable cross-engine,
-    # what every oracle-checked query uses. 'fast': plain double sums —
-    # the production knob (~15% per call measured at sf0.1, more as
-    # edge volume grows); double sums are partition-order-dependent in
-    # the last ulps, but the damped iteration is a contraction, so
-    # fast-mode ranks agree with exact mode to ~1e-12 relative
-    # (pytest-pinned) — fine for ranking, wrong for a bit-exact replay
-    # gate.
-    term_t = PR_TERM_DECIMAL if precision == "exact" else "double"
 
     # out-degree-0 nodes — a map-side filter of the fused degree frame
     # (zero src-row count == no out-edges; see the marker note above);
@@ -273,33 +251,28 @@ def pagerank(
                 )
             ).alias("rank"),
         )
-    # ``broadcast_state`` (optimization round 15): the per-round state
-    # tables (rank, contributions) are NODE-scale while ``e`` is
-    # EDGE-scale, but both sides come off checkpointed RDDs whose
-    # stats are opaque to the planner — measured at sf0.1, every round
-    # sort-merge-joined the 1.17M-row edge table (a full edge shuffle
-    # PER ROUND). The explicit broadcast makes each round one map-side
-    # join over the stationary checkpointed edges + one node-scale
-    # aggregate exchange. Set False only when the node table itself
-    # exceeds broadcast limits (~10^8 nodes); the rounds then revert
-    # to shuffling node-scale rows against the edge partitioning.
-    _bs = F.broadcast if broadcast_state else (lambda df: df)
+    # the per-round state tables (rank, contributions) are NODE-scale
+    # and always broadcast: both sides come off checkpointed RDDs whose
+    # stats are opaque to the planner, so it would otherwise
+    # sort-merge-join the edge table every round (a full edge shuffle
+    # per round). Broadcast, each round is one map-side join over the
+    # stationary checkpointed edges + one node-scale aggregate exchange.
     for _ in range(iterations):
         contrib = (
-            e.join(_bs(rank), e._esrc == rank.node)
+            e.join(F.broadcast(rank), e._esrc == rank.node)
             .select(
                 F.col("_edst").alias("node"),
-                (F.col("rank") * F.col("_frac")).cast(term_t).alias("_term"),
+                (F.col("rank") * F.col("_frac")).cast(PR_TERM_DECIMAL).alias("_term"),
             )
             .groupBy("node")
             .agg(F.sum("_term").alias("_mass"))
         )
         updated = (
-            nodes.join(_bs(contrib), on="node", how="left")
+            nodes.join(F.broadcast(contrib), on="node", how="left")
             .crossJoin(F.broadcast(ncnt))
         )
         damped_mass = F.lit(damping) * F.coalesce(
-            F.col("_mass"), F.lit(0).cast(term_t)
+            F.col("_mass"), F.lit(0).cast(PR_TERM_DECIMAL)
         ).cast("double")
         if dangling == "redistribute":
             # decimal-exact 1-row sum of the round's dangling rank,
@@ -308,8 +281,8 @@ def pagerank(
                 rank.join(dangling_nodes, on="node", how="left_semi")
                 .agg(
                     F.coalesce(
-                        F.sum(F.col("rank").cast(term_t)),
-                        F.lit(0).cast(term_t),
+                        F.sum(F.col("rank").cast(PR_TERM_DECIMAL)),
+                        F.lit(0).cast(PR_TERM_DECIMAL),
                     ).alias("_dmass")
                 )
             )
@@ -340,7 +313,6 @@ def label_propagation(
     dst: str = "dst",
     weight: str = "weight",
     iter_partitions: int | None = None,
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """Synchronous weighted label propagation (community detection):
     every node starts labeled with its own id; each round, a node
@@ -383,7 +355,7 @@ def label_propagation(
     # over its partitions — caching it at the node-state parallelism
     # measured 5.5s -> 8s at sf0.1 (rounds serialized onto 4/32
     # cores, the r15 pagerank lesson); the session/AQE sizing keeps
-    # the round work wide.
+    # the round work wide. ``materialize.clear()`` releases the cache.
     e = edges.select(
         F.col(src).alias("_esrc"),
         F.col(dst).alias("_edst"),
@@ -391,13 +363,11 @@ def label_propagation(
     ).repartition(F.col("_edst")).cache()
     labels = nodes.withColumn("label", F.col("node"))
     w_pick = Window.partitionBy("_edst").orderBy(F.desc("_mass"), F.asc("label"))
-    # node-scale state broadcast per round — same rationale and knob as
-    # :func:`pagerank` (checkpointed-RDD stats are opaque, so the
-    # planner otherwise sort-merge-joins the edge table every round)
-    _bs = F.broadcast if broadcast_state else (lambda df: df)
+    # node-scale state broadcast per round — same rationale as
+    # :func:`pagerank`
     for _ in range(iterations):
         adopted = (
-            e.join(_bs(labels), e._esrc == labels.node)
+            e.join(F.broadcast(labels), e._esrc == labels.node)
             .groupBy("_edst", "label")
             .agg(F.sum("_w").alias("_mass"))
             .withColumn("_rn", F.row_number().over(w_pick))
@@ -405,7 +375,7 @@ def label_propagation(
             .select(F.col("_edst").alias("node"), F.col("label").alias("_new"))
         )
         labels = (
-            labels.join(_bs(adopted), on="node", how="left")
+            labels.join(F.broadcast(adopted), on="node", how="left")
             .select("node", F.coalesce("_new", "label").alias("label"))
             .localCheckpoint(eager=False)
         )
@@ -608,7 +578,6 @@ def core_numbers(
     src: str = "s1",
     dst: str = "s2",
     iter_partitions: int | None = None,
-    broadcast_state: bool = True,
 ) -> DataFrame:
     """k-core decomposition of an undirected edge list (``src < dst``)
     by the h-index fixpoint iteration (Lü et al. 2016, "The H-index of
@@ -651,7 +620,8 @@ def core_numbers(
     # every round's map + h-index aggregate runs over these
     # partitions, and caching at the node-state parallelism would
     # serialize the rounds onto a handful of cores (the r15 pagerank
-    # lesson, re-measured here at sf0.1).
+    # lesson, re-measured here at sf0.1). ``materialize.clear()``
+    # releases the cache.
     und = doubled.repartition(F.col("u")).cache()
     core = und.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("val"))
     h_expr = _bind1(
@@ -660,14 +630,11 @@ def core_numbers(
         "cast(size(filter(transform(sequence(1, size(sd)),"
         " i -> -element_at(sd, i) >= i), b -> b)) as bigint)",
     )
-    # node-scale state broadcast per round — same rationale and knob as
-    # :func:`pagerank` (checkpointed-RDD stats are opaque, so the
-    # planner otherwise sort-merge-joins the doubled edge list every
-    # h-index round)
-    _bs = F.broadcast if broadcast_state else (lambda df: df)
+    # node-scale state broadcast per round — same rationale as
+    # :func:`pagerank`
     for _ in range(int(rounds)):
         nb = und.join(
-            _bs(core.select(F.col("u").alias("v"), F.col("val"))), on="v"
+            F.broadcast(core.select(F.col("u").alias("v"), F.col("val"))), on="v"
         ).select("u", "val")
         core = (
             nb.groupBy("u")

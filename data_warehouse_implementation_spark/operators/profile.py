@@ -7,11 +7,7 @@ Scale shape: ONE aggregate pass over the table produces every column's
 stats (a single job, map-side partial aggregation). The multiple
 ``count(distinct)`` aggregates are planned by Spark via a single
 Expand + two-stage hash aggregate — data is replicated x#cols inside
-the shuffle, the standard exact-distinct trade. At 100 TB swap
-``exact=False`` to profile with ``approx_count_distinct`` (HLL, no
-expand replication, one ordinary shuffle) — the cardinality column is
-then an estimate, which is what production profilers (e.g. deequ-style
-data-quality suites) report too.
+the shuffle, the standard exact-distinct trade.
 
 Output is long format (one row per column) so downstream quality gates
 can join/filter it relationally. min/max are stringified through a
@@ -36,20 +32,17 @@ def _as_string(df: DataFrame, col: str):
     return lambda c: c.cast("string")
 
 
-def profile_table(
-    df: DataFrame, cols: Sequence[str] | None = None, exact: bool = True
-) -> DataFrame:
+def profile_table(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """Per-column profile: ``(column_name, n_rows, n_nonnull,
     n_distinct, min_value, max_value)``, one row per profiled column,
     computed in a single aggregate pass."""
     cols = list(cols) if cols is not None else df.columns
-    distinct = F.countDistinct if exact else F.approx_count_distinct
     aggs = [F.count(F.lit(1)).alias("_n_rows")]
     for c in cols:
         s = _as_string(df, c)
         aggs += [
             F.count(F.col(c)).alias(f"_nn_{c}"),
-            distinct(F.col(c)).alias(f"_nd_{c}"),
+            F.countDistinct(F.col(c)).alias(f"_nd_{c}"),
             s(F.min(F.col(c))).alias(f"_min_{c}"),
             s(F.max(F.col(c))).alias(f"_max_{c}"),
         ]

@@ -270,9 +270,11 @@ def global_dense_rank(
     w_in = Window.partitionBy("_b").orderBy(*cols)
     # the ranked frame feeds both the offsets branch and the join —
     # the deferred checkpoint materializes it once inside the first
-    # consumer's job (plus: a checkpointed window output is what makes
-    # the counts aggregate below exchange-free — it reuses the window's
-    # hash partitioning on _b)
+    # consumer's job. A checkpoint does NOT keep the window's hash
+    # partitioning on _b (its output partitioning is unknown to the
+    # planner), so the counts aggregate below plans its own exchange;
+    # that exchange carries map-side partials, one row per bucket per
+    # task — bucket-scale, not row-scale.
     ranked = b.withColumn("_rn", F.dense_rank().over(w_in)).localCheckpoint(eager=False)
     counts = ranked.groupBy("_b").agg(F.max("_rn").alias("_n"))
     w_off = Window.orderBy("_b").rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -527,15 +527,12 @@ ORDER BY n_name, order_rank
 CAL_START, CAL_END = "1992-01-01", "2002-12-31"
 
 
-def calendar_dim(t: dict[str, DataFrame], spark=None) -> DataFrame:
+def calendar_dim(t: dict[str, DataFrame]) -> DataFrame:
     """Generated date dimension (reference F3 + date_dimension build,
     ``inserting-data.sql:38-44``). The date itself is exposed as a
     yyyy-MM-dd string in the oracle-checked output — DATE cells
     serialize differently across Spark/DuckDB/pandas."""
-    from pyspark.sql import SparkSession
-
-    spark = spark or SparkSession.getActiveSession()
-    c = cal.build_calendar(spark, CAL_START, CAL_END)
+    c = cal.build_calendar(t["orders"].sparkSession, CAL_START, CAL_END)
     return c.select(
         "date_id",
         F.date_format("date", "yyyy-MM-dd").alias("date_str"),
@@ -568,11 +565,9 @@ def shipments_by_quarter(t: dict[str, DataFrame]) -> DataFrame:
 
     The calendar is generated (≈3k rows) and broadcast: the fact scan
     is never shuffled by the date join at any scale."""
-    from pyspark.sql import SparkSession
-
-    caldf = cal.build_calendar(SparkSession.getActiveSession(), CAL_START, CAL_END)
     li = t["lineitem"].select("l_orderkey", "l_shipdate")
     orders = t["orders"].select("o_orderkey", "o_orderdate")
+    caldf = cal.build_calendar(li.sparkSession, CAL_START, CAL_END)
 
     ship_cal = caldf.select(
         F.col("year").alias("ship_year"),

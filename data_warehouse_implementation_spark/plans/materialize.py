@@ -117,10 +117,15 @@ def materialize(name: str, df: DataFrame, sf_dir: str = "") -> DataFrame:
 
 
 def clear() -> None:
-    """Unpersist and drop every cached intermediate (test hygiene)."""
-    for _, (owner, df) in list(_CACHE.items()):
+    """Drop every cached intermediate and release EVERY cached relation
+    of the sessions involved (the entries' sessions and the active
+    one) — including caches operators keep outside this registry, such
+    as the graph walks' partitioned edge tables (test/bench hygiene)."""
+    sessions = [df.sparkSession for _, df in _CACHE.values()]
+    sessions.append(SparkSession.getActiveSession())
+    _CACHE.clear()
+    for spark in {id(s): s for s in sessions if s is not None}.values():
         try:
-            df.unpersist()
+            spark.catalog.clearCache()
         except Exception:
             pass  # session already stopped
-    _CACHE.clear()

@@ -32,13 +32,15 @@ from . import scd
 AS_OF = "2024-06-01"
 
 
-def _spark() -> SparkSession:
-    return SparkSession.getActiveSession()
+def _spark(t: dict[str, DataFrame]) -> SparkSession:
+    """The session of the input tables — not the thread's active
+    session, which a plain worker thread does not have."""
+    return t["orders"].sparkSession
 
 
-def _df(rows, cols_types) -> DataFrame:
-    schema = StructType([StructField(n, t, True) for n, t in cols_types])
-    return _spark().createDataFrame(rows, schema)
+def _df(t: dict[str, DataFrame], rows, cols_types) -> DataFrame:
+    schema = StructType([StructField(n, typ, True) for n, typ in cols_types])
+    return _spark(t).createDataFrame(rows, schema)
 
 
 def _dated(df: DataFrame, *cols: str) -> DataFrame:
@@ -61,10 +63,12 @@ def _stringify_dates(df: DataFrame, *cols: str) -> DataFrame:
 
 def scd1_upsert_batch(t: dict[str, DataFrame]) -> DataFrame:
     existing = _df(
+        t,
         [(1, "a"), (2, "b")],
         [("key", LongType()), ("payload", StringType())],
     )
     incoming = _df(
+        t,
         [(2, "b2", 1), (3, "c", 2), (3, "c2", 3)],
         [("key", LongType()), ("payload", StringType()), ("seq", LongType())],
     )
@@ -86,8 +90,9 @@ SELECT * FROM (VALUES
 
 
 def insert_if_absent_batch(t: dict[str, DataFrame]) -> DataFrame:
-    existing = _df([(1, "a")], [("key", LongType()), ("payload", StringType())])
+    existing = _df(t, [(1, "a")], [("key", LongType()), ("payload", StringType())])
     incoming = _df(
+        t,
         [(1, "zzz", 1), (2, "b", 2), (2, "b2", 3)],
         [("key", LongType()), ("payload", StringType()), ("seq", LongType())],
     )
@@ -109,7 +114,7 @@ SELECT * FROM (VALUES
 
 def scd2_apply_batch(t: dict[str, DataFrame]) -> DataFrame:
     dim = _dated(
-        _spark().createDataFrame(
+        _spark(t).createDataFrame(
             [
                 (1, "a", "2020-01-01", "2099-12-31", True),
                 (1, "a0", "2019-01-01", "2020-01-01", False),
@@ -120,7 +125,7 @@ def scd2_apply_batch(t: dict[str, DataFrame]) -> DataFrame:
         "start_date",
         "end_date",
     )
-    incoming = _spark().createDataFrame(
+    incoming = _spark(t).createDataFrame(
         [(1, "a1", 1), (3, "c1", 2), (3, "c2", 3)],
         "key long, payload string, seq long",
     )
@@ -149,7 +154,7 @@ ORDER BY key, start_date, payload
 
 def scd3_apply_batch(t: dict[str, DataFrame]) -> DataFrame:
     dim = _dated(
-        _spark().createDataFrame(
+        _spark(t).createDataFrame(
             [
                 (1, "n1", "Yes", "", "2020-01-01"),
                 (2, "n2", "No", "", "2020-01-01"),
@@ -161,7 +166,7 @@ def scd3_apply_batch(t: dict[str, DataFrame]) -> DataFrame:
         ),
         "effective_date",
     )
-    incoming = _spark().createDataFrame(
+    incoming = _spark(t).createDataFrame(
         [
             (1, "nX", "No", 1),   # change: Yes -> No
             (2, "nY", "No", 2),   # no change (null-safe equal)

@@ -199,36 +199,3 @@ def test_wordpiece_encode_matches_python_greedy_on_corpus(spark):
     for w, pieces in got.items():
         assert pieces == greedy(w), (w, pieces, greedy(w))
 
-
-def test_bpe_encode_plain_join_matches_broadcast(spark):
-    """ADVICE r15: ``broadcast_vocab=False`` (the escape for
-    vocabularies past broadcast limits) must be live code and produce
-    the identical token stream — join strategy never changes values."""
-    train = spark.createDataFrame(
-        [(1, "the cat sat on the mat the cat"), (2, "the hat on the cat")],
-        "doc_id long, text string",
-    )
-    merges = bpe.bpe_train(train, n_merges=4)
-    alpha = bpe.corpus_alphabet(train)
-    probe = spark.createDataFrame(
-        [(9, "the züx cat"), (3, "the cat hat")], "doc_id long, text string"
-    )
-    bcast = sorted(
-        (r.doc_id, r.token)
-        for r in bpe.bpe_encode(probe, merges, alphabet=alpha).collect()
-    )
-    plain = sorted(
-        (r.doc_id, r.token)
-        for r in bpe.bpe_encode(
-            probe, merges, alphabet=alpha, broadcast_vocab=False
-        ).collect()
-    )
-    assert bcast == plain
-    strict_plain = sorted(
-        (r.doc_id, r.token)
-        for r in bpe.bpe_encode(probe, merges, broadcast_vocab=False).collect()
-    )
-    strict_bcast = sorted(
-        (r.doc_id, r.token) for r in bpe.bpe_encode(probe, merges).collect()
-    )
-    assert strict_plain == strict_bcast

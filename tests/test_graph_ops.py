@@ -237,39 +237,6 @@ def test_core_numbers_matches_peeling_reference(spark):
     assert again == got  # fixpoint: extra rounds are idempotent
 
 
-def test_broadcast_state_false_parity_all_walks(spark):
-    """The ``broadcast_state=False`` escape hatch (graphs whose node
-    table exceeds broadcast limits) must stay LIVE code and produce
-    bit-identical results for all three walks — join strategy never
-    changes values (VERDICT r15 #10 / ADVICE r15)."""
-    rows = [
-        ("a", "h", 3), ("b", "h", 1), ("h", "a", 2), ("h", "b", 1),
-        ("a", "b", 1), ("b", "a", 2),
-    ]
-    e = _edges(spark, rows)
-    pr_b = sorted((r.node, r["rank"]) for r in graph.pagerank(e, iterations=3).collect())
-    pr_s = sorted(
-        (r.node, r["rank"])
-        for r in graph.pagerank(e, iterations=3, broadcast_state=False).collect()
-    )
-    assert pr_b == pr_s
-    lp_b = sorted((r.node, r.label) for r in graph.label_propagation(e, iterations=3).collect())
-    lp_s = sorted(
-        (r.node, r.label)
-        for r in graph.label_propagation(e, iterations=3, broadcast_state=False).collect()
-    )
-    assert lp_b == lp_s
-    und = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3), (3, 4), (4, 5)], "s1 long, s2 long"
-    )
-    kc_b = sorted((r.node, r.core) for r in graph.core_numbers(und, rounds=6).collect())
-    kc_s = sorted(
-        (r.node, r.core)
-        for r in graph.core_numbers(und, rounds=6, broadcast_state=False).collect()
-    )
-    assert kc_b == kc_s
-
-
 def test_pagerank_null_weight_out_edges_not_dangling(spark):
     """ADVICE r15 (graph.py fused degree aggregate): a node whose
     out-edges all carry NULL weights must classify as NON-dangling —
@@ -279,3 +246,20 @@ def test_pagerank_null_weight_out_edges_not_dangling(spark):
     e = spark.createDataFrame(rows, "src string, dst string, weight long")
     got = {r.node: r["rank"] for r in graph.pagerank(e, iterations=1).collect()}
     assert set(got) == {"a", "b"}  # forbid-mode guard did NOT fire
+
+
+def test_materialize_clear_releases_walk_edge_caches(spark):
+    """label_propagation and core_numbers cache a partitioned edge
+    table outside the materialize registry; ``materialize.clear()``
+    must release those too, or a long-lived session carries every
+    walk's edge cache forever."""
+    from data_warehouse_implementation_spark.plans import materialize
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    e = _edges(spark, [("a", "b", 2), ("b", "a", 1), ("b", "c", 1), ("c", "a", 3)])
+    graph.label_propagation(e, iterations=2).collect()
+    und = spark.createDataFrame([(1, 2), (1, 3), (2, 3), (3, 4)], "s1 long, s2 long")
+    graph.core_numbers(und, rounds=3).collect()
+    assert not cache_manager.isEmpty()
+    materialize.clear()
+    assert cache_manager.isEmpty()

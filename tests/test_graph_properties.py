@@ -149,38 +149,3 @@ def test_label_propagation_matches_python_replay(spark, edges):
     }
     assert got == _py_lpa(edges, iterations=3)
 
-
-def test_pagerank_fast_precision_matches_exact_within_contraction_bound(spark):
-    """The production 'fast' knob (plain double sums instead of
-    decimal-cast contributions) must agree with exact mode to the
-    contraction bound on every node, conserve mass under redistribute,
-    and reject unknown modes."""
-    import pytest
-
-    edges = spark.createDataFrame(
-        [("a", "b", 2), ("b", "a", 1), ("b", "c", 1), ("c", "a", 3),
-         ("c", "d", 1), ("d", "b", 5), ("d", "c", 2)],
-        "src string, dst string, weight long",
-    )
-    exact = {r.node: r["rank"] for r in graph.pagerank(edges, iterations=5).collect()}
-    fast = {
-        r.node: r["rank"]
-        for r in graph.pagerank(edges, iterations=5, precision="fast").collect()
-    }
-    assert set(exact) == set(fast)
-    for n in exact:
-        assert abs(exact[n] - fast[n]) < 1e-12, (n, exact[n], fast[n])
-
-    sink = spark.createDataFrame(
-        [("a", "b", 1), ("b", "c", 1)], "src string, dst string, weight long"
-    )
-    got = {
-        r.node: r["rank"]
-        for r in graph.pagerank(
-            sink, iterations=4, dangling="redistribute", precision="fast"
-        ).collect()
-    }
-    assert abs(sum(got.values()) - 1.0) < 1e-12
-
-    with pytest.raises(ValueError, match="precision must be"):
-        graph.pagerank(edges, precision="both")

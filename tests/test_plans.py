@@ -230,3 +230,35 @@ def test_materialize_build_seconds_nesting_exclusive(spark):
     # lockstep invariant over the whole process history
     assert len(materialize.BUILD_LOG) == len(materialize.BUILD_SECONDS)
     materialize.clear()
+
+
+def test_registry_queries_run_on_thread_without_active_session(spark):
+    """Plan code takes its session from the input frames, never from
+    the calling thread's active session: a plain worker thread (no
+    active session set) must produce the same rows as the main
+    thread for the queries that build literal frames or a calendar."""
+    import threading
+
+    names = [
+        "calendar_dim",
+        "shipments_by_quarter",
+        "scd1_upsert_batch",
+        "insert_if_absent_batch",
+        "scd2_apply_batch",
+        "scd3_apply_batch",
+    ]
+    got: dict[str, object] = {}
+
+    def work() -> None:
+        for name in names:
+            try:
+                got[name] = registry.queries()[name](spark, SF).collect()
+            except Exception as exc:  # surfaced by the assert below
+                got[name] = exc
+
+    worker = threading.Thread(target=work)
+    worker.start()
+    worker.join()
+    for name in names:
+        assert not isinstance(got[name], Exception), (name, got[name])
+        assert got[name] == registry.queries()[name](spark, SF).collect(), name

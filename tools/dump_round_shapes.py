@@ -35,7 +35,7 @@ def _formatted(df: DataFrame) -> str:
 
 def main() -> int:
     tag = sys.argv[1]
-    from data_warehouse_implementation_spark.operators import dedup, suffix
+    from data_warehouse_implementation_spark.operators import suffix
     from data_warehouse_implementation_spark.session import get_spark, load_tables
 
     # strip every checkpoint barrier so the full round lineage prints
@@ -136,16 +136,8 @@ def main() -> int:
     # --- ONE connected-components round, over REAL (eager) checkpoints
     # so the leaves are Scan ExistingRDD with planner-opaque stats —
     # exactly the state every real round sees; the round body below
-    # mirrors dedup.connected_components verbatim, with the state
-    # broadcast present iff the installed code has the knob (so the
-    # same script dumps an honest before AND after across a stash).
-    import inspect
-
+    # mirrors dedup.connected_components verbatim (node state broadcast).
     _cdf.DataFrame.localCheckpoint = _real_ckpt  # restore the real method
-    has_bs = "broadcast_state" in inspect.signature(
-        dedup.connected_components
-    ).parameters
-    _bs = F.broadcast if has_bs else (lambda df: df)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
     )
@@ -163,14 +155,14 @@ def main() -> int:
         .localCheckpoint()
     )
     neighbor_min = (
-        sym.join(_bs(labels), sym.dst == labels.id)
+        sym.join(F.broadcast(labels), sym.dst == labels.id)
         .groupBy("src")
         .agg(F.min("label").alias("_nbr"))
     )
     parent = labels.select(F.col("id").alias("_pid"), F.col("label").alias("_plabel"))
     new_labels = (
-        labels.join(_bs(neighbor_min), labels.id == neighbor_min.src, "left")
-        .join(_bs(parent), labels.label == F.col("_pid"), "left")
+        labels.join(F.broadcast(neighbor_min), labels.id == neighbor_min.src, "left")
+        .join(F.broadcast(parent), labels.label == F.col("_pid"), "left")
         .select(
             "id",
             F.least(
@@ -186,7 +178,7 @@ def main() -> int:
         "pointer jumping) over eagerly-checkpointed sym/labels — the "
         "Scan ExistingRDD leaves have planner-opaque stats, exactly "
         "what every real round sees; round body mirrors "
-        f"dedup.connected_components (broadcast_state knob present: {has_bs}).",
+        "dedup.connected_components.",
         new_labels,
     )
 
